@@ -124,11 +124,3 @@ def search_document_text(
         )
         for r in hits
     )
-
-
-AGENT_TOOLS = {
-    "search_chunks": search_chunks,
-    "get_document": get_document,
-    "list_documents": list_documents,
-    "search_document_text": search_document_text,
-}

@@ -142,6 +142,14 @@ def _barrier(df: DataFrame, **exprs) -> DataFrame:
     return b.select(*df.columns, *[F.col(f"_gen.{k}").alias(k) for k in exprs])
 
 
+def _with_tokens(df: DataFrame) -> DataFrame:
+    """``df`` + the token array ``toks`` behind a _barrier (the token
+    builders capture it in higher-order-function lambdas). A no-op when
+    an earlier builder already staged it, so a suite that composes
+    several token builders tokenizes each row once."""
+    return df if "toks" in df.columns else _barrier(df, toks=_tokens_col())
+
+
 def _ngrams_col(toks, n: int):
     """Distinct word n-grams. Guarded: sequence(0, size-n) is descending
     for size<n in Spark, so short docs get an explicit empty array."""
@@ -1015,14 +1023,6 @@ def _lsh_planes(table: int) -> list[list[float]]:
     return planes
 
 
-def _bucket_expr(vcol, planes: list[list[float]]):
-    bits = []
-    for p, row in enumerate(planes):
-        proj = _dot(vcol, F.array(*[F.lit(x) for x in row]))
-        bits.append(F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return sum(bits).cast("long")
-
-
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table sign-random-projection LSH: L=32 hash tables x k=4
     deterministic hyperplanes (16 buckets per table); the corpus
@@ -1700,10 +1700,6 @@ def _sql_ann_int8_accuracy() -> str:
 # ---------------------------------------------------------------------------
 
 
-def _hits(toks, words: list[str]):
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-
 def _trigrams_col():
     """All character trigrams of the space-padded lowercased text —
     padding makes word-boundary trigrams (' th', 'he ') visible, the
@@ -1719,10 +1715,6 @@ def _trigrams_col():
     )
 
 
-def _tri_hits(tris, profile: list[str]):
-    return F.size(F.filter(tris, lambda x: x.isin(*profile)))
-
-
 # CJK block detection (zh): count of chars in the CJK Unified
 # Ideographs block; majority-CJK text classifies as zh before the
 # Latin trigram vote runs. Integer char counts in both engines.
@@ -1730,58 +1722,52 @@ _CJK_NEG_SPARK = "[^一-鿿]"
 _CJK_NEG_DUCK = r"[^\x{4e00}-\x{9fff}]"
 
 
-def _cjk_chars_col():
-    return F.length(F.regexp_replace(F.col("text"), _CJK_NEG_SPARK, ""))
+_LANG_VOTE = ("en", "de", "es", "fr")  # argmax tie order
 
 
-def _tri_score_frame(df: DataFrame) -> DataFrame:
-    """``df`` (must carry ``text``) + MATERIALIZED trigram-profile
-    score columns (en, de, es, fr, n_tris, cjk, n_chars), built behind
-    two Generate (explode-of-1-element-array) barriers:
+def _lang_id_frame(df: DataFrame) -> DataFrame:
+    """lang_id column builder: ``df`` (must carry ``text``) +
+    ``lang_pred``, ``tri_hits``, ``tri_ratio``. Predicts zh when the
+    text is majority-CJK, else the language with the most profile
+    trigram hits (tie order en>de>es>fr), 'und' when nothing hits.
 
+    The profile counts are MATERIALIZED behind two _barrier stages:
     barrier 1 evaluates the padded trigram array ONCE per row; barrier
     2 runs ONE InSet pass per profile over that materialized array.
-    The barriers matter because consumers reference the counts many
-    times (the argmax CASE chain alone touches en..fr ~17x, and a
-    filter on lang_pred pulls the whole chain into one predicate) and
-    Catalyst's projection collapse re-expands a non-attribute alias at
-    every reference — measured 67 s for corpus_filter at sf0.1 with
-    inline expressions vs ~1 s materialized; Generate outputs are
-    attributes, which collapse can never re-expand. Both barriers are
-    narrow (per-row, zero shuffle) and the values are bit-identical,
-    so the DuckDB oracles are untouched."""
-    b1 = df.withColumn("_tris", F.explode(F.array(_trigrams_col())))
-    scores = F.struct(
-        *[
-            _tri_hits(F.col("_tris"), LANG_PROFILES[l]).alias(l)
-            for l in ("en", "de", "es", "fr")
-        ],
-        F.size("_tris").alias("n_tris"),
-        _cjk_chars_col().alias("cjk"),
-        F.length("text").alias("n_chars"),
+    The barriers matter because the argmax CASE chain touches the
+    counts ~17x (and a filter on lang_pred pulls the whole chain into
+    one predicate), and Catalyst's projection collapse re-expands a
+    non-attribute alias at every reference — measured 67 s for
+    corpus_filter at sf0.1 with inline expressions vs ~1 s
+    materialized; Generate outputs are attributes, which collapse can
+    never re-expand. Both barriers are narrow (per-row, zero shuffle)
+    and the values are bit-identical, so the DuckDB oracles are
+    untouched."""
+    d = _barrier(df, _tris=_trigrams_col())
+    d = _barrier(
+        d,
+        **{
+            # F.filter calls the lambda at once, so `l` binds per key
+            f"_{l}": F.size(F.filter("_tris", lambda x: x.isin(*LANG_PROFILES[l])))
+            for l in _LANG_VOTE
+        },
+        _n_tris=F.size("_tris"),
+        _cjk=F.length(F.regexp_replace(F.col("text"), _CJK_NEG_SPARK, "")),
     )
-    b2 = b1.withColumn("_sc", F.explode(F.array(scores)))
-    return b2.select(
-        *df.columns,
-        *[F.col(f"_sc.{c}") for c in ("en", "de", "es", "fr", "n_tris", "cjk", "n_chars")],
-    )
-
-
-def _lang_pred_col():
-    """The argmax CASE over MATERIALIZED score columns (see
-    _tri_score_frame): zh when majority-CJK, else highest profile hit
-    count with fixed tie order en>de>es>fr, 'und' when nothing hits.
-    References are plain attributes, so the chain is cheap no matter
-    how many times each count appears."""
-    best = F.greatest("en", "de", "es", "fr")
-    return (
-        F.when(2 * F.col("cjk") >= F.greatest(F.col("n_chars"), F.lit(1)), F.lit("zh"))
-        .when(best == 0, F.lit("und"))
-        .when(F.col("en") == best, F.lit("en"))
-        .when(F.col("de") == best, F.lit("de"))
-        .when(F.col("es") == best, F.lit("es"))
-        .otherwise(F.lit("fr"))
-    )
+    hits = [F.col(f"_{l}") for l in _LANG_VOTE]
+    best = F.greatest(*hits)
+    pred = F.when(
+        2 * F.col("_cjk") >= F.greatest(F.length("text"), F.lit(1)), F.lit("zh")
+    ).when(best == 0, F.lit("und"))
+    for l, h in zip(_LANG_VOTE[:-1], hits):
+        pred = pred.when(h == best, F.lit(l))
+    return d.withColumns(
+        {
+            "lang_pred": pred.otherwise(F.lit(_LANG_VOTE[-1])),
+            "tri_hits": best.cast("long"),
+            "tri_ratio": F.round(best / F.greatest(F.col("_n_tris"), F.lit(1)), 6),
+        }
+    ).drop("_tris", "_n_tris", "_cjk", *[f"_{l}" for l in _LANG_VOTE])
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1801,7 +1787,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     task; at 100 TB the scan has thousands of splits and AQE coalesces
     this exchange away to nothing — it is the north-star's "explicit
     repartitioning before the tokenize+classify hot loop"), then the
-    two-barrier materialized scoring of _tri_score_frame, then one
+    two-barrier materialized scoring of _lang_id_frame, then one
     cheap projection.
 
     Honesty note (measured, see tests/test_dataops.py
@@ -1814,19 +1800,13 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic multilingual corpus with real per-language text
     (≥0.9 per-language recall, en/de/es/fr/zh), while the testdata
     confusion rollup stays the honest data-bound report."""
-    d0 = (
+    d = (
         _docs(spark, sf_dir)
         .select("doc_id", F.col("lang").alias("lang_true"), "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    d = _tri_score_frame(d0)
-    best = F.greatest("en", "de", "es", "fr")
-    return d.select(
-        "doc_id",
-        "lang_true",
-        _lang_pred_col().alias("lang_pred"),
-        best.cast("long").alias("tri_hits"),
-        F.round(best / F.greatest(F.col("n_tris"), F.lit(1)), 6).alias("tri_ratio"),
+    return _lang_id_frame(d).select(
+        "doc_id", "lang_true", "lang_pred", "tri_hits", "tri_ratio"
     )
 
 
@@ -1873,16 +1853,17 @@ SQL_LANG_ID = f"""
 """
 
 
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length/stopword/alpha ratios + mean token length
-    combined into one [0,1] score (Gopher-rules shape). Pure column
-    expressions — whole-stage codegen, no shuffle."""
-    toks = _tokens_col()
+def _text_quality_frame(df: DataFrame) -> DataFrame:
+    """text_quality column builder: ``df`` (must carry ``text``) +
+    ``n_tokens``, ``mean_token_len``, ``alpha_ratio``,
+    ``stopword_ratio``, ``quality_score`` (and the staged ``toks``)."""
+    d = _with_tokens(df)
+    toks = F.col("toks")
     n_toks = F.size(toks)
-    n_chars = F.length(F.col("text"))
     alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", ""))
-    stop_ratio = _hits(toks, EN_STOP) / F.greatest(n_toks, F.lit(1))
-    alpha_ratio = alpha_chars / F.greatest(n_chars, F.lit(1))
+    stop_hits = F.size(F.filter(toks, lambda t: t.isin(*EN_STOP)))
+    stop_ratio = stop_hits / F.greatest(n_toks, F.lit(1))
+    alpha_ratio = alpha_chars / F.greatest(F.length("text"), F.lit(1))
     mean_tok_len = F.aggregate(
         toks, F.lit(0.0), lambda acc, t: acc + F.length(t)
     ) / F.greatest(n_toks, F.lit(1))
@@ -1891,13 +1872,24 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when((mean_tok_len >= 3.0) & (mean_tok_len <= 10.0), F.lit(1.0)).otherwise(F.lit(0.0))
     )
     score = 0.3 * len_score + 0.3 * alpha_ratio + 0.2 * stop_ratio + 0.2 * wlen_ok
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        n_toks.cast("long").alias("n_tokens"),
-        F.round(mean_tok_len, 6).alias("mean_token_len"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality_score"),
+    return d.withColumns(
+        {
+            "n_tokens": n_toks.cast("long"),
+            "mean_token_len": F.round(mean_tok_len, 6),
+            "alpha_ratio": F.round(alpha_ratio, 6),
+            "stopword_ratio": F.round(stop_ratio, 6),
+            "quality_score": F.round(score, 6),
+        }
+    )
+
+
+def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality scoring: length/stopword/alpha ratios + mean token length
+    combined into one [0,1] score (Gopher-rules shape). Column
+    expressions over the once-staged token array — no shuffle."""
+    return _text_quality_frame(_docs(spark, sf_dir)).select(
+        "doc_id", "n_tokens", "mean_token_len", "alpha_ratio", "stopword_ratio",
+        "quality_score",
     )
 
 
@@ -1935,26 +1927,35 @@ SQL_TEXT_QUALITY = f"""
 """
 
 
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace tokens, regex word tokens, and a
-    BPE-ish estimate (sum of ceil(len/4) over word tokens + count of
-    non-space punctuation)."""
-    toks = _tokens_col()
-    ws = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+def _token_count_frame(df: DataFrame) -> DataFrame:
+    """token_count column builder: ``df`` (must carry ``text``) +
+    ``ws_tokens``, ``word_tokens``, ``bpe_est_tokens`` (and the staged
+    ``toks``)."""
+    d = _with_tokens(df)
     punct = F.length(F.regexp_replace(F.col("text"), r"[A-Za-z0-9\s]", ""))
     bpe = (
         F.aggregate(
-            toks,
+            "toks",
             F.lit(0).cast("long"),
             lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("long"),
         )
         + punct.cast("long")
     )
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        ws.cast("long").alias("ws_tokens"),
-        F.size(toks).cast("long").alias("word_tokens"),
-        bpe.alias("bpe_est_tokens"),
+    return d.withColumns(
+        {
+            "ws_tokens": F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long"),
+            "word_tokens": F.size("toks").cast("long"),
+            "bpe_est_tokens": bpe,
+        }
+    )
+
+
+def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token counting: whitespace tokens, regex word tokens, and a
+    BPE-ish estimate (sum of ceil(len/4) over word tokens + count of
+    non-space punctuation)."""
+    return _token_count_frame(_docs(spark, sf_dir)).select(
+        "doc_id", "ws_tokens", "word_tokens", "bpe_est_tokens"
     )
 
 
@@ -2071,6 +2072,24 @@ SQL_UNIGRAM_LOGPROB = f"""
 """
 
 
+def _doc_fingerprint_frame(df: DataFrame) -> DataFrame:
+    """doc_fingerprint column builder: ``df`` (must carry ``text``) +
+    ``fp_bottomk`` (md5 of the 8 smallest shingle md5s) and
+    ``n_shingles`` (and the staged ``toks``)."""
+    d = _barrier(_with_tokens(df), _sh=_shingles_col(F.col("toks")))
+    hs = F.slice(F.array_sort(F.transform("_sh", lambda s: F.md5(s))), 1, 8)
+    # NULL fingerprint (not md5('')) when the doc is too short to
+    # shingle: DuckDB's array_to_string on an empty list is NULL, and
+    # the edge-corpus oracle (tests/test_edge_corpus.py) pins both
+    # engines to the same convention; the gate corpus has no such docs
+    return d.withColumns(
+        {
+            "fp_bottomk": F.when(F.size("_sh") > 0, F.md5(F.array_join(hs, ""))),
+            "n_shingles": F.size("_sh").cast("long"),
+        }
+    ).drop("_sh")
+
+
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-8 sketch fingerprint: md5 each shingle, keep the 8 smallest
     hashes, fingerprint = md5 of their concatenation. Entirely array-
@@ -2080,22 +2099,11 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ran the regex tokenizer per shingle when `toks` was an inline
     expression — 17.3 s -> ~0.5 s at sf0.1), and the slim frame is
     fanned out round-robin first (single-split testdata input)."""
-    d = _barrier(
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism),
-        toks=_tokens_col(),
+    d = _docs(spark, sf_dir).select("doc_id", "text").repartition(
+        spark.sparkContext.defaultParallelism
     )
-    d = _barrier(d, sh=_shingles_col(F.col("toks")))
-    hs = F.slice(F.array_sort(F.transform(F.col("sh"), lambda s: F.md5(s))), 1, 8)
-    # NULL fingerprint (not md5('')) when the doc is too short to
-    # shingle: DuckDB's array_to_string on an empty list is NULL, and
-    # the edge-corpus oracle (tests/test_edge_corpus.py) pins both
-    # engines to the same convention; the gate corpus has no such docs
-    return d.select(
-        "doc_id",
-        F.when(F.size("sh") > 0, F.md5(F.array_join(hs, ""))).alias("fingerprint"),
-        F.size("sh").cast("long").alias("n_shingles"),
+    return _doc_fingerprint_frame(d).select(
+        "doc_id", F.col("fp_bottomk").alias("fingerprint"), "n_shingles"
     )
 
 
@@ -2396,59 +2404,50 @@ WINNOW_M = 2**31 - 1
 _WINNOW_P = [pow(WINNOW_B, WINNOW_GRAM - 1 - j, WINNOW_M) for j in range(WINNOW_GRAM)]
 
 
-def winnow_frame(
-    df: DataFrame, carry: tuple[str, ...] = (), keep_selected: bool = False
-) -> DataFrame:
-    """Append winnowing-fingerprint columns (``n_grams``, ``n_selected``,
-    ``fingerprint``) to a frame holding ``doc_id`` and ``t`` (the
-    lowercased text); ``carry`` columns pass through the staged narrow
-    projections untouched. Factored out so the doc_fingerprints suite
-    can compute both fingerprint families in ONE scan (suites.py).
-    ``keep_selected`` additionally emits the sorted distinct selected
-    hash array ``sel`` (the MOSS candidate-pair join key set,
-    q_winnow_near_dup)."""
+def winnow_frame(df: DataFrame) -> DataFrame:
+    """doc_winnow_fingerprint column builder: ``df`` (must carry
+    ``text``) + ``n_grams``, ``n_selected``, ``fingerprint`` and ``sel``
+    (the sorted distinct selected hash array — the MOSS candidate-pair
+    join key set, q_winnow_near_dup)."""
     # CAST to BIGINT first: int32 * int32 overflows under ANSI mode
     terms = " + ".join(
-        f"CAST(ascii(substring(t, i + {j}, 1)) AS BIGINT) * {_WINNOW_P[j]}"
+        f"CAST(ascii(substring(_t, i + {j}, 1)) AS BIGINT) * {_WINNOW_P[j]}"
         for j in range(WINNOW_GRAM)
     )
     # Spark's sequence(1, 0) is DESCENDING [1, 0] — guard short docs
     hashes = (
-        f"CASE WHEN length(t) >= {WINNOW_GRAM} THEN "
-        f"transform(sequence(1, length(t) - {WINNOW_GRAM - 1}), i -> ({terms}) % {WINNOW_M}) "
+        f"CASE WHEN length(_t) >= {WINNOW_GRAM} THEN "
+        f"transform(sequence(1, length(_t) - {WINNOW_GRAM - 1}), i -> ({terms}) % {WINNOW_M}) "
         f"ELSE array() END"
     )
     wins = (
-        f"CASE WHEN size(h) >= {WINNOW_WINDOW} THEN "
-        f"transform(sequence(1, size(h) - {WINNOW_WINDOW - 1}), "
-        f"w -> array_min(slice(h, w, {WINNOW_WINDOW}))) ELSE array() END"
+        f"CASE WHEN size(_h) >= {WINNOW_WINDOW} THEN "
+        f"transform(sequence(1, size(_h) - {WINNOW_WINDOW - 1}), "
+        f"w -> array_min(slice(_h, w, {WINNOW_WINDOW}))) ELSE array() END"
     )
-    c = list(carry)
     # Each stage is a _barrier, not a bare projection: the wins lambda
-    # captures h (slice(h, w, 4) per window) and projection collapse
+    # captures _h (slice(_h, w, 4) per window) and projection collapse
     # would otherwise inline the WHOLE rolling-hash transform into the
     # lambda — re-evaluated per window element, O(len^2) per row
     # (measured 15.0 s -> ~0.6 s for doc_winnow_fingerprint at sf0.1).
-    # t is an alias (lower(text)) at every caller, referenced by all 8
-    # rolling-hash terms per element — materialize it first too.
-    b0 = _barrier(
-        df.select("doc_id", *c, F.col("t").alias("_traw")), t=F.col("_traw")
-    ).drop("_traw")
-    b1 = _barrier(b0, h=F.expr(hashes))
-    b2 = _barrier(b1, wins=F.expr(wins))
-    b3 = _barrier(b2, sel=F.expr("array_sort(array_distinct(wins))"))
-    return b3.selectExpr(
-        "doc_id",
-        *c,
-        "CAST(size(h) AS BIGINT) AS n_grams",
-        "CAST(size(sel) AS BIGINT) AS n_selected",
-        # NULL (not md5('')) when nothing was selected — matches
-        # DuckDB's NULL array_to_string([]) (tests/test_edge_corpus.py)
-        "CASE WHEN size(sel) > 0 THEN"
-        " md5(array_join(transform(sel, x -> CAST(x AS STRING)), ',')) END"
-        " AS fingerprint",
-        *(["sel"] if keep_selected else []),
-    )
+    # The lowered text is referenced by all 8 rolling-hash terms per
+    # element — materialize it first too.
+    b0 = _barrier(df, _t=F.lower(F.col("text")))
+    b1 = _barrier(b0, _h=F.expr(hashes))
+    b2 = _barrier(b1, _wins=F.expr(wins))
+    b3 = _barrier(b2, sel=F.expr("array_sort(array_distinct(_wins))"))
+    return b3.withColumns(
+        {
+            "n_grams": F.size("_h").cast("long"),
+            "n_selected": F.size("sel").cast("long"),
+            # NULL (not md5('')) when nothing was selected — matches
+            # DuckDB's NULL array_to_string([]) (tests/test_edge_corpus.py)
+            "fingerprint": F.expr(
+                "CASE WHEN size(sel) > 0 THEN"
+                " md5(array_join(transform(sel, x -> CAST(x AS STRING)), ',')) END"
+            ),
+        }
+    ).drop("_t", "_h", "_wins")
 
 
 def q_doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2462,11 +2461,10 @@ def q_doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     property bottom-k sketches (q_doc_fingerprint) lack. Per-row column
     expressions staged through winnow_frame's _barrier stages; the
     round-robin fan-out defuses the single-split testdata input."""
-    return winnow_frame(
-        _docs(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .selectExpr("doc_id", "lower(text) AS t")
-    ).select("doc_id", "n_grams", "n_selected", "fingerprint")
+    d = _docs(spark, sf_dir).select("doc_id", "text").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return winnow_frame(d).select("doc_id", "n_grams", "n_selected", "fingerprint")
 
 
 def _sql_winnow_cte() -> str:
@@ -2538,12 +2536,7 @@ def _winnow_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cached
     par = spark.sparkContext.defaultParallelism
     sel = (
-        winnow_frame(
-            _docs(spark, sf_dir)
-            .repartition(par)
-            .selectExpr("doc_id", "lower(text) AS t"),
-            keep_selected=True,
-        )
+        winnow_frame(_docs(spark, sf_dir).select("doc_id", "text").repartition(par))
         .select("doc_id", "sel")
         .localCheckpoint()
     )
@@ -3733,7 +3726,7 @@ def _sa_self_dup_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = token_re.findall(text.lower())
                 n = len(toks)
-                if n < 2 * m:
+                if n < m + 1:  # no two length-m substrings fit
                     continue
                 sa = sorted(range(n), key=lambda i: toks[i:])
                 covered = np.zeros(n, dtype=bool)
@@ -4374,9 +4367,13 @@ def _best_seg(w: str, probs: dict) -> tuple:
     '|'-joined path. ENUMERATION, not Viterbi DP, deliberately: the
     DuckDB oracle enumerates segmentations with a recursive CTE (DP
     with the global (prob, n_pieces, path) tie-break is not
-    prefix-decomposable), and the corpus tokens are short enough
-    (≤ ~12 chars, parts ≤ UNIGRAM_PMAX) that enumeration is bounded;
-    a production kernel swaps in Viterbi with a prob-only tie-break."""
+    prefix-decomposable). Nothing bounds the token length: the count
+    of segmentations into parts ≤ UNIGRAM_PMAX grows about 2x per
+    char (a 22-char run of one piece takes ~2.5 s), so enumeration is
+    only cheap because the gate corpus's tokens are short (≤ ~12
+    chars). The 300-char token of tests/test_edge_corpus.py doc 9
+    keeps unigram_lm_vocab from finishing. A production kernel swaps
+    in Viterbi with a prob-only tie-break."""
     n = len(w)
     best = None
     stack = [(0, 1.0, 0, "")]
@@ -5125,34 +5122,23 @@ SQL_EVENTS_UNPIVOT = f"""
 # ---------------------------------------------------------------------------
 
 
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc repetition metrics: distinct-token ratio, top-token
-    fraction, top-bigram fraction (the Gopher repetition-rule family).
-    Per-row maps only — no explode, no groupBy: the token list stays
-    inside one row, so at 100 TB this is a scan-side projection. The
-    token and bigram arrays are _barrier-materialized (the top-count
-    lambdas capture them — `filter(bigrams, x == g)` per distinct
-    bigram re-built the whole zip_with per element when bigrams was an
-    inline expression: 18.5 s -> ~0.6 s at sf0.1), and the slim frame
-    fans out round-robin first (single-split testdata input)."""
-    d = _barrier(
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism),
-        toks=_tokens_col(),
-    )
-    n0 = F.size("toks")
+def _text_repetition_frame(df: DataFrame) -> DataFrame:
+    """text_repetition column builder: ``df`` (must carry ``text``) +
+    ``n_tokens``, ``distinct_ratio``, ``top_token_frac``,
+    ``top_bigram_frac`` (and the staged ``toks``)."""
+    d = _with_tokens(df)
+    toks = F.col("toks")
+    n = F.size(toks)
     d = _barrier(
         d,
-        dist=F.array_distinct(F.col("toks")),
-        bigrams=F.zip_with(
-            F.slice(F.col("toks"), 1, F.greatest(n0 - 1, F.lit(0))),
-            F.slice(F.col("toks"), 2, F.greatest(n0 - 1, F.lit(0))),
+        _dist=F.array_distinct(toks),
+        _bigrams=F.zip_with(
+            F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
+            F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
             lambda a, b: F.concat(a, F.lit(" "), b),
         ),
     )
-    toks, dist, bigrams = F.col("toks"), F.col("dist"), F.col("bigrams")
-    n = F.size(toks)
+    dist, bigrams = F.col("_dist"), F.col("_bigrams")
     nb = F.size(bigrams)
     top_tok = F.coalesce(
         F.array_max(
@@ -5169,12 +5155,31 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(0),
     )
-    return d.select(
-        "doc_id",
-        n.cast("long").alias("n_tokens"),
-        F.round(F.size(dist) / F.greatest(n, F.lit(1)), 6).alias("distinct_ratio"),
-        F.round(top_tok / F.greatest(n, F.lit(1)), 6).alias("top_token_frac"),
-        F.round(top_bigram / F.greatest(nb, F.lit(1)), 6).alias("top_bigram_frac"),
+    return d.withColumns(
+        {
+            "n_tokens": n.cast("long"),
+            "distinct_ratio": F.round(F.size(dist) / F.greatest(n, F.lit(1)), 6),
+            "top_token_frac": F.round(top_tok / F.greatest(n, F.lit(1)), 6),
+            "top_bigram_frac": F.round(top_bigram / F.greatest(nb, F.lit(1)), 6),
+        }
+    ).drop("_dist", "_bigrams")
+
+
+def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc repetition metrics: distinct-token ratio, top-token
+    fraction, top-bigram fraction (the Gopher repetition-rule family).
+    Per-row maps only — no explode, no groupBy: the token list stays
+    inside one row, so at 100 TB this is a scan-side projection. The
+    token and bigram arrays are _barrier-materialized (the top-count
+    lambdas capture them — `filter(bigrams, x == g)` per distinct
+    bigram re-built the whole zip_with per element when bigrams was an
+    inline expression: 18.5 s -> ~0.6 s at sf0.1), and the slim frame
+    fans out round-robin first (single-split testdata input)."""
+    d = _docs(spark, sf_dir).select("doc_id", "text").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return _text_repetition_frame(d).select(
+        "doc_id", "n_tokens", "distinct_ratio", "top_token_frac", "top_bigram_frac"
     )
 
 
@@ -5339,6 +5344,18 @@ def _doc_hash_bucket(n_buckets: int, col: str = "doc_id"):
     return h % n_buckets
 
 
+def _train_test_split_frame(df: DataFrame) -> DataFrame:
+    """train_test_split column builder: ``df`` (must carry ``doc_id``)
+    + ``split``."""
+    bucket = _doc_hash_bucket(100)
+    return df.withColumn(
+        "split",
+        F.when(bucket < SPLIT_TRAIN_PCT, "train")
+        .when(bucket < SPLIT_VAL_PCT, "val")
+        .otherwise("test"),
+    )
+
+
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 90/5/5 train/val/test assignment by hashing
     doc_id — the standard reproducible-split primitive (a random()
@@ -5346,14 +5363,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle: at 100 TB this is a scan-side projection that any
     downstream job recomputes for free instead of joining a split
     table."""
-    bucket = _doc_hash_bucket(100)
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
+    return _train_test_split_frame(_docs(spark, sf_dir)).select("doc_id", "split")
 
 
 SQL_TRAIN_TEST_SPLIT = f"""
@@ -5424,6 +5434,15 @@ SQL_TRAINING_SHARDS = f"""
 """
 
 
+def _stratified_sample_frame(df: DataFrame) -> DataFrame:
+    """stratified_sample column builder: ``df`` (must carry ``doc_id``,
+    ``lang``) + the keep flag ``sample_kept``."""
+    rate = F.lit(1.0)
+    for lang, r in reversed(STRATA_RATES.items()):
+        rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
+    return df.withColumn("sample_kept", _doc_hash_bucket(10000) < rate * 10000)
+
+
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain mixing by deterministic per-language downsampling (the
     corpus-reweighting step of every pretraining mix: keep 30% of the
@@ -5431,19 +5450,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff hash-fraction(doc_id) < rate(lang): content-independent,
     reproducible, and — unlike df.sampleBy — identical across engines
     and partitionings. Narrow map, zero shuffle."""
-    frac = _doc_hash_bucket(10000)
-    rate = F.lit(None).cast("double")
-    expr = None
-    for lang, r in STRATA_RATES.items():
-        expr = (
-            F.when(F.col("lang") == lang, F.lit(r))
-            if expr is None
-            else expr.when(F.col("lang") == lang, F.lit(r))
-        )
-    rate = expr.otherwise(F.lit(1.0))
     return (
-        _docs(spark, sf_dir)
-        .filter(frac < rate * 10000)
+        _stratified_sample_frame(_docs(spark, sf_dir))
+        .filter(F.col("sample_kept"))
         .select("doc_id", "lang")
     )
 
@@ -5463,19 +5472,34 @@ SQL_STRATIFIED_SAMPLE = f"""
 """
 
 
+def _domain_cap_frame(df: DataFrame) -> DataFrame:
+    """domain_cap column builder: ``df`` (must carry ``doc_id``,
+    ``source``) + ``rk``, the doc's rank by doc hash within its source,
+    and ``cap_rank`` = rk when it is within the cap, else 0. The one
+    per-source rank window (a shuffle on source, no global sort)."""
+    w = Window.partitionBy("source").orderBy(F.col("_h"), F.col("doc_id"))
+    return (
+        df.withColumn("_h", _doc_hash_bucket(1_000_000_000))
+        .withColumn("rk", F.row_number().over(w))
+        .withColumn(
+            "cap_rank",
+            F.when(F.col("rk") <= DOMAIN_CAP_K, F.col("rk")).otherwise(F.lit(0)).cast("long"),
+        )
+        .drop("_h")
+    )
+
+
 def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain document cap (C4-style: no single source may dominate
     the corpus): keep the K=5 docs with the smallest doc hash per
     source. The rank window partitions on source — each domain sorts
     independently, so there is no global sort; a domain skewed enough
     to blow a partition would be pre-capped by a groupBy-count pass
-    feeding a threshold (same pattern as the dedup suite's MAX_DF)."""
-    h = _doc_hash_bucket(1_000_000_000)
-    w = Window.partitionBy("source").orderBy(F.col("h"), F.col("doc_id"))
+    feeding a threshold (same pattern as the dedup suite's MAX_DF).
+    The filter reads the raw rank so Catalyst plans a WindowGroupLimit
+    ahead of the exchange (at most K rows per source per task)."""
     return (
-        _docs(spark, sf_dir)
-        .withColumn("h", h)
-        .withColumn("rk", F.row_number().over(w))
+        _domain_cap_frame(_docs(spark, sf_dir))
         .filter(F.col("rk") <= DOMAIN_CAP_K)
         .select("doc_id", "source", "rk")
     )

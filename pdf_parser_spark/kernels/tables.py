@@ -1,4 +1,4 @@
-"""Table kernels (T3-T5 in SURVEY.md §2.4).
+"""Table kernels (T3 and T5 in SURVEY.md §2.4; T4 is not implemented).
 
 reference: src/extractors/tables.py:117-199. T1 (camelot lattice
 parse) is PDF-library-bound; in the transcript graft, table regions
@@ -18,22 +18,6 @@ def merge_table_cells(rows: list[list[str]]) -> list[list[str]]:
     if not rows:
         return rows
     return [[str(cell).strip() for cell in row] for row in rows]
-
-
-def validate_table_structure(rows: list[list[str]]) -> bool:
-    """T4 — reference: src/extractors/tables.py:144-168.
-
-    Valid when every row's column count is within +/-1 of row 0's.
-    """
-    if not rows:
-        return False
-    num_cols = len(rows[0])
-    if num_cols == 0:
-        return False
-    for row in rows:
-        if len(row) != num_cols and abs(len(row) - num_cols) > 1:
-            return False
-    return True
 
 
 def normalize_table_data(rows: list[list[str]]) -> list[list[str]]:

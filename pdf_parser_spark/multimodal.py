@@ -29,15 +29,6 @@ from pyspark.sql import types as T
 
 MEDIA_TYPES = ["image", "audio", "video"]
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField("n_bytes", T.IntegerType(), False),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

@@ -590,15 +590,3 @@ def export_text_overlay(
             F.round(font, 6).alias("font_size_pts"),
         )
     )
-
-
-def write_extracted(extracted: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    """Sink: parquet, clustered by conversation and ordered within
-    partitions so downstream per-conv reads are sequential (the
-    reference's ordered-merge determinism, src/pipeline.py:833-845)."""
-    (
-        extracted.repartition(F.col("conv_id"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode(mode)
-        .parquet(out_dir)
-    )

@@ -12,30 +12,21 @@ only re-keyed. SURVEY.md §2 maps operator -> gate key.
 
 Every composite's ORACLE composes the member SQL verbatim. On the
 Spark side, composites reuse the member q_* functions where that
-already yields the right plan (the union suites); ``q_text_metrics``
-and ``q_doc_fingerprints`` instead fuse the member logic into one
-single-scan projection (the 100 TB shape — see their docstrings), so
-the standalone member functions are additionally pinned to their own
-oracles by tests/test_suite_members.py to prevent silent drift between
-a member and its fused copy.
+already yields the right plan (the union suites); ``q_text_metrics``,
+``q_doc_fingerprints`` and ``q_corpus_assembly`` instead apply their
+per-doc members' column builders (dataops ``_*_frame``) in sequence
+over one scan (the 100 TB shape — see their docstrings). Each member
+query is the same builder over its own scan, so a suite and its
+members share one implementation of every expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dataops import (
     DATAOPS_ORACLES,
-    DE_STOP,
-    DOMAIN_CAP_K,
-    EN_STOP,
-    ES_STOP,
-    FR_STOP,
-    LANG_PROFILES,
-    _barrier,
-    _lang_pred_col,
-    _tri_score_frame,
     SQL_HARD_NEGATIVES,
     SQL_INCREMENTAL_DEDUP,
     _sql_bpe_tokenize,
@@ -48,11 +39,8 @@ from .dataops import (
     q_dedup_accuracy,
     q_incremental_dedup,
     q_unigram_logprob,
-    SPLIT_TRAIN_PCT,
-    SPLIT_VAL_PCT,
     SQL_DOC_FINGERPRINT,
     SQL_DOMAIN_CAP,
-    SQL_EVENTS_PIVOT,
     SQL_HIST_QUANTILES,
     SQL_KMV_DISTINCT_USERS,
     SQL_LANG_ID,
@@ -63,13 +51,8 @@ from .dataops import (
     SQL_TOKEN_COUNT,
     SQL_TRAIN_TEST_SPLIT,
     SQL_WEIGHTED_SAMPLE,
-    STRATA_RATES,
-    _doc_hash_bucket,
     _docs,
-    _hits,
-    _shingles_col,
     _sql_doc_winnow_fingerprint,
-    _tokens_col,
     q_embedding_kmeans,
     q_embedding_pca1,
     q_hist_quantiles,
@@ -79,6 +62,14 @@ from .dataops import (
     q_lang_mixture,
     q_weighted_sample,
     winnow_frame,
+    _doc_fingerprint_frame,
+    _domain_cap_frame,
+    _lang_id_frame,
+    _stratified_sample_frame,
+    _text_quality_frame,
+    _text_repetition_frame,
+    _token_count_frame,
+    _train_test_split_frame,
 )
 from .multimodal import (
     SQL_AUDIO_SEGMENTS,
@@ -124,107 +115,43 @@ from .queries import (
 def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc text-analysis suite: language ID vote, quality score,
     token counts, repetition metrics — one wide row per doc, computed
-    in ONE pass. The members stay available standalone, but composing
-    them as joins would scan the text-heavy documents table four times
-    and shuffle three times; here every metric is a column expression
-    over one scan (zero shuffle, one whole-stage-codegen projection) —
-    the shape a 100 TB metrics pass must have. The DuckDB oracle is
-    the members' SQL joined on doc_id, so any drift between this
-    projection and the member semantics fails the gate.
+    in ONE pass. Composing the member queries as joins would scan the
+    text-heavy documents table four times and shuffle three times;
+    here the members' column builders run in sequence over one scan
+    (zero shuffle, per-row maps only) — the shape a 100 TB metrics
+    pass must have. The builders share one staged token array, and
+    text_quality and text_repetition both emit the same ``n_tokens``,
+    kept once. The DuckDB oracle is the members' SQL joined on doc_id.
 
-    "One pass" is kept honest under Catalyst's projection collapse by
-    the same two Generate barriers as q_lang_id (_tri_score_frame
-    materializes the trigram profile counts; a first barrier here also
-    materializes the token array) — without them every reference to a
-    count or to `toks` re-expands the full array construction
-    (measured 7.2 s -> ~1 s at sf0.1). The barriers are per-row and
-    shuffle-free; the round-robin fan-out before them is the
-    north-star's explicit repartition ahead of the classify hot loop
-    (the testdata parquet is a single input split)."""
-    base = (
+    The round-robin fan-out ahead of the builders is the north-star's
+    explicit repartition before the classify hot loop (the testdata
+    parquet is a single input split)."""
+    d = (
         _docs(spark, sf_dir)
         .select("doc_id", "lang", "text")
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("_toks", F.explode(F.array(_tokens_col())))
     )
-    sc = _tri_score_frame(base)
-    toks = F.col("_toks")
-    n_toks = F.size(toks)
-    # --- lang_id member (disjoint char-trigram profiles + CJK gate,
-    # the round-5 classifier — see q_lang_id); en..fr/n_tris/cjk/
-    # n_chars are materialized attributes from _tri_score_frame ---
-    n_chars = F.col("n_chars")
-    best = F.greatest("en", "de", "es", "fr")
-    pred = _lang_pred_col()
-    # --- text_quality member ---
-    alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", ""))
-    stop_ratio_en = _hits(toks, EN_STOP) / F.greatest(n_toks, F.lit(1))
-    alpha_ratio = alpha_chars / F.greatest(n_chars, F.lit(1))
-    mean_tok_len = F.aggregate(
-        toks, F.lit(0.0), lambda acc, t: acc + F.length(t)
-    ) / F.greatest(n_toks, F.lit(1))
-    len_score = F.least(n_toks / F.lit(100.0), F.lit(1.0))
-    wlen_ok = F.when(
-        (mean_tok_len >= 3.0) & (mean_tok_len <= 10.0), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    score = 0.3 * len_score + 0.3 * alpha_ratio + 0.2 * stop_ratio_en + 0.2 * wlen_ok
-    # --- token_count member ---
-    ws = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    punct = F.length(F.regexp_replace(F.col("text"), r"[A-Za-z0-9\s]", ""))
-    bpe = (
-        F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("long"),
-        )
-        + punct.cast("long")
-    )
-    # --- text_repetition member (dist/bigrams _barrier-materialized:
-    # the top-count lambdas capture them, see q_text_repetition) ---
-    sc = _barrier(
-        sc,
-        dist=F.array_distinct(toks),
-        bigrams=F.zip_with(
-            F.slice(toks, 1, F.greatest(n_toks - 1, F.lit(0))),
-            F.slice(toks, 2, F.greatest(n_toks - 1, F.lit(0))),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-    )
-    dist, bigrams = F.col("dist"), F.col("bigrams")
-    top_tok = F.coalesce(
-        F.array_max(
-            F.transform(dist, lambda t: F.size(F.filter(toks, lambda x: x == t)))
-        ),
-        F.lit(0),
-    )
-    top_bigram = F.coalesce(
-        F.array_max(
-            F.transform(
-                F.array_distinct(bigrams),
-                lambda g: F.size(F.filter(bigrams, lambda x: x == g)),
-            )
-        ),
-        F.lit(0),
-    )
-    return sc.select(
+    for build in (
+        _lang_id_frame, _text_quality_frame, _token_count_frame, _text_repetition_frame
+    ):
+        d = build(d)
+    return d.select(
         "doc_id",
         F.col("lang").alias("lang_true"),
-        pred.alias("lang_pred"),
-        best.cast("long").alias("tri_hits"),
-        F.round(best / F.greatest(F.col("n_tris"), F.lit(1)), 6).alias("tri_ratio"),
-        n_toks.cast("long").alias("n_tokens"),
-        F.round(mean_tok_len, 6).alias("mean_token_len"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(stop_ratio_en, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality_score"),
-        ws.cast("long").alias("ws_tokens"),
-        n_toks.cast("long").alias("word_tokens"),
-        bpe.alias("bpe_est_tokens"),
-        F.round(F.size(dist) / F.greatest(n_toks, F.lit(1)), 6).alias("distinct_ratio"),
-        F.round(top_tok / F.greatest(n_toks, F.lit(1)), 6).alias("top_token_frac"),
-        F.round(top_bigram / F.greatest(F.size(bigrams), F.lit(1)), 6).alias(
-            "top_bigram_frac"
-        ),
+        "lang_pred",
+        "tri_hits",
+        "tri_ratio",
+        "n_tokens",
+        "mean_token_len",
+        "alpha_ratio",
+        "stopword_ratio",
+        "quality_score",
+        "ws_tokens",
+        "word_tokens",
+        "bpe_est_tokens",
+        "distinct_ratio",
+        "top_token_frac",
+        "top_bigram_frac",
     ).join(
         # unigram-LM member: inherently two-pass (the corpus unigram
         # model is an aggregate), so it cannot fuse into the projection
@@ -298,30 +225,17 @@ SQL_TEXT_METRICS = f"""
 
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both document-fingerprint schemes side by side, in ONE scan:
-    the bottom-8 shingle sketch is computed as carry columns through
-    the winnowing frame's staged narrow projections (winnow_frame) —
-    no join, no second read of the text column. Members stay
-    zero-shuffle column expressions; oracle = the members' SQL joined
-    on doc_id, so the fused plan is held to the composed semantics.
-    Token/shingle arrays ride the same _barrier stages as the members
-    (see q_doc_fingerprint / winnow_frame), and the slim frame fans
-    out round-robin first (single-split testdata input)."""
-    d = _barrier(
+    the bottom-8 shingle sketch builder and the winnowing builder run
+    in sequence over the same slim frame — no join, no second read of
+    the text column, zero shuffle beyond the round-robin fan-out
+    (single-split testdata input). Oracle = the members' SQL joined on
+    doc_id."""
+    d = (
         _docs(spark, sf_dir)
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism),
-        toks=_tokens_col(),
+        .repartition(spark.sparkContext.defaultParallelism)
     )
-    d = _barrier(d, sh=_shingles_col(F.col("toks")))
-    hs = F.slice(F.array_sort(F.transform(F.col("sh"), lambda s: F.md5(s))), 1, 8)
-    base = d.select(
-        "doc_id",
-        # NULL (not md5('')) for shingle-less docs, as in the member
-        F.when(F.size("sh") > 0, F.md5(F.array_join(hs, ""))).alias("fp_bottomk"),
-        F.size("sh").cast("long").alias("n_shingles"),
-        F.lower(F.col("text")).alias("t"),
-    )
-    return winnow_frame(base, carry=("fp_bottomk", "n_shingles")).select(
+    return winnow_frame(_doc_fingerprint_frame(d)).select(
         "doc_id",
         "fp_bottomk",
         "n_shingles",
@@ -360,44 +274,20 @@ def q_corpus_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     language-mixture keep flag (q_lang_mixture) — a |langs|-row rate
     table broadcast onto the same doc grain.
     Oracle = the members' SQL left-joined on doc_id."""
-    bucket = _doc_hash_bucket(100)
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-    )
-    rate = None
-    for lang, r in STRATA_RATES.items():
-        rate = (
-            F.when(F.col("lang") == lang, F.lit(r))
-            if rate is None
-            else rate.when(F.col("lang") == lang, F.lit(r))
-        )
-    sample_kept = _doc_hash_bucket(10000) < rate.otherwise(F.lit(1.0)) * 10000
-    w = Window.partitionBy("source").orderBy(F.col("h"), F.col("doc_id"))
+    d = _docs(spark, sf_dir).select("doc_id", "lang", "source")
+    for build in (_train_test_split_frame, _stratified_sample_frame, _domain_cap_frame):
+        d = build(d)
     ws_ids = q_weighted_sample(spark, sf_dir).select(
         "doc_id", F.lit(True).alias("_ws")
     )
     mix = q_lang_mixture(spark, sf_dir).select("doc_id", "mix_keep")
     return (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            "source",
-            split.alias("split"),
-            sample_kept.alias("sample_kept"),
-            _doc_hash_bucket(1_000_000_000).alias("h"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .join(ws_ids, "doc_id", "left")
+        d.join(ws_ids, "doc_id", "left")
         .select(
             "doc_id",
             "split",
             "sample_kept",
-            F.when(F.col("rk") <= DOMAIN_CAP_K, F.col("rk"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("cap_rank"),
+            "cap_rank",
             F.coalesce(F.col("_ws"), F.lit(False)).alias("wsample_kept"),
         )
         .join(mix, "doc_id", "left")
@@ -1018,9 +908,6 @@ SQL_EMBEDDING_SUITE = f"""
         FROM ({SQL_HARD_NEGATIVES}) WHERE label = 'random' GROUP BY query_id
     ) rn ON km.vec_id = rn.query_id
 """
-
-
-SQL_EVENTS_PIVOT_SUITE = SQL_EVENTS_PIVOT  # re-export for registry symmetry
 
 
 SUITE_QUERIES = {

@@ -1204,20 +1204,26 @@ def test_dup_spans_sa_finds_sub_floor_self_repeats(spark, tmp_path):
     """A doc whose only duplication is an internal 2-token repeat —
     below the cross-doc DUP_SPAN_GRAM floor and invisible to
     q_dup_spans (nothing is shared across docs) — must yield a span
-    from the suffix-array pass, with exact boundaries."""
+    from the suffix-array pass, with exact boundaries. A doc of
+    m + 1 tokens with an overlapping repeat ("x x x": "x x" at 0 and
+    1) is long enough for the kernel and must be covered end to end."""
     import os
 
-    from pdf_parser_spark.dataops import q_dup_spans, q_dup_spans_sa
+    from pdf_parser_spark.dataops import (
+        _sa_self_dup_positions,
+        q_dup_spans,
+        q_dup_spans_sa,
+    )
 
     #           0   1   2   3    4    5   6   7   8    9
     text = "alpha beta alpha beta alpha beta gamma delta epsilon zeta"
     pdf = pd.DataFrame(
         {
-            "doc_id": [0, 1],
-            "text": [text, "one two three four five six seven"],
-            "lang": ["en", "en"],
-            "source": ["s", "s"],
-            "n_chars": [len(text), 33],
+            "doc_id": [0, 1, 2],
+            "text": [text, "one two three four five six seven", "x x x"],
+            "lang": ["en", "en", "en"],
+            "source": ["s", "s", "s"],
+            "n_chars": [len(text), 33, 5],
         }
     )
     td = str(tmp_path / "sa_sf")
@@ -1230,6 +1236,10 @@ def test_dup_spans_sa_finds_sub_floor_self_repeats(spark, tmp_path):
     assert len(sa) == 1
     r = sa.iloc[0]
     assert (r["doc_id"], r["start_tok"], r["end_tok"]) == (0, 0, 6)
+    # the 3-token doc's span is below DUP_SPAN_MIN_TOKENS, so check the
+    # kernel's covered positions directly
+    pos = _sa_self_dup_positions(spark, td).filter("doc_id = 2").toPandas()
+    assert set(pos["pos"]) == {0, 1, 2}
 
 
 def test_hard_negatives_ann_matches_exact_twin(spark):

@@ -154,6 +154,14 @@ def test_barrier_single_construction(spark):
         assert p.count("Generate explode") >= 2, name
     p = full_plan(SUITE_QUERIES["text_metrics"](spark, SF_DIR))
     assert p.count("substring(concat") == 1  # trigram build once
+    # the suites compose the member builders, which stage the token
+    # array once; the standalone members must be staged the same way
+    for name in ("text_quality", "token_count"):
+        p = full_plan(DATAOPS_QUERIES[name](spark, SF_DIR))
+        assert p.count("regexp_extract_all") == 1, name
+    p = full_plan(SUITE_QUERIES["doc_fingerprints"](spark, SF_DIR))
+    assert p.count("regexp_extract_all") == 1
+    assert p.count("ascii(") == 8
     # rolling-hash build marker: the 8 ascii() terms of ONE h construction
     p = full_plan(DATAOPS_QUERIES["doc_winnow_fingerprint"](spark, SF_DIR))
     assert p.count("ascii(") == 8

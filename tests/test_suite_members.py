@@ -4,13 +4,13 @@ only through a composite suite key.
 The gate registry is exactly 50 keys (``__spark_entry__.GATE_ORDER``),
 so same-grain members (lang_id, token_count, the window/rollup shapes,
 …) are value-hash-checked there only via their suite composite. The
-composite ORACLES compose the member SQL verbatim, but two composites
-(``text_metrics``, ``doc_fingerprints``) fuse the member logic into a
-single-scan Spark projection rather than calling the member functions —
-so a drift in a standalone member q_* (used by bench.py and direct
-callers) would NOT fail the gate. This module closes that hole: every
-member query that is not itself a gate key is checked against its own
-DuckDB oracle at sf0.001, the same comparison the gate applies.
+per-doc suites (``text_metrics``, ``doc_fingerprints``,
+``corpus_assembly``) apply the same column builders their member
+queries do, so a member cannot drift from its suite copy; what the
+gate still does not see is each member query's own output shape (its
+select, filter, renames and the member-only oracle SQL). This module
+checks every member query that is not itself a gate key against its
+own DuckDB oracle at sf0.001, the same comparison the gate applies.
 """
 
 import duckdb
