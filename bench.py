@@ -287,7 +287,9 @@ def _rest_completed_stages(ui_base: str) -> list[dict]:
 def run_decompose(spark, sf_dir: str, names: list[str]) -> dict:
     """Attribute each query's executor time to scan / shuffle / JVM
     compute / non-JVM residue (Python workers + Arrow + IO wait), by
-    diffing the completed-stage set around a single fresh run.
+    diffing the completed-stage set around a single fresh run. The run
+    goes to the noop sink like the main bench (``_time_query``), so
+    Catalyst cannot prune the columns whose cost is being attributed.
 
     Units normalized to ms: executorRunTime / jvmGcTime /
     shuffleFetchWaitTime arrive in ms, executorCpuTime /
@@ -305,7 +307,7 @@ def run_decompose(spark, sf_dir: str, names: list[str]) -> dict:
     # warm the Python workers / Arrow path / codegen before measuring:
     # without this the FIRST query absorbs worker startup and its
     # python+arrow residue reads ~30 points too high (observed)
-    QUERIES[names[0]](spark, sf_dir).count()
+    _time_query(QUERIES[names[0]], spark, sf_dir)
 
     out: dict[str, dict] = {}
     for name in names:
@@ -314,9 +316,7 @@ def run_decompose(spark, sf_dir: str, names: list[str]) -> dict:
         before = {
             (s["stageId"], s["attemptId"]) for s in _rest_completed_stages(ui_base)
         }
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        wall = time.perf_counter() - t0
+        wall, _ = _time_query(fn, spark, sf_dir)
         time.sleep(0.5)  # let the last stage land in the status store
         stages = [
             s

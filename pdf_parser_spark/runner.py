@@ -18,22 +18,35 @@ snapshot log; a real deployment would use MERGE INTO on an Iceberg
 same. Inside each bucket the extraction still salts on (conv_id,
 turn_idx-hash) so a single million-turn conversation spreads across
 tasks (pipeline.extract_turns).
+
+The runner's own bookkeeping rows (lineage, ``_metrics``, empty
+frames) are built on the driver and handed to the JVM as Arrow
+batches (``_local_frame``). ``spark.createDataFrame(list)`` would make
+a pickled Python RDD, which starts Python tasks just to move one row:
+measured cold on 4 cores, a lineage append took 0.68-0.81 s that way
+and 0.08-0.11 s through Arrow, and the ``_metrics`` write 0.88 s
+against 0.09 s.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
 import traceback
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .pipeline import EXTRACTED_WITH_SEQ_SCHEMA, extract_turns, run_metrics
+
+log = logging.getLogger(__name__)
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -46,6 +59,16 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("error_message", T.StringType(), True),
     ]
 )
+
+
+def _local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Driver-side rows as a DataFrame that runs no Python task (see the
+    module notes). A pyarrow table rather than a pandas frame: PySpark
+    sends an EMPTY pandas frame, or any pandas frame when Arrow is off
+    in the session, down the pickled-RDD path, but a table always goes
+    through Arrow."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def with_bucket(transcripts: DataFrame, n_buckets: int) -> DataFrame:
@@ -104,14 +127,17 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     # WARN + FileNotFoundException stack (FileStreamSink metadata
     # probe) before the exception reaches the except arm below
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+        return _local_frame(spark, [], LINEAGE_SCHEMA)
     try:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     except Exception:
-        return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+        return _local_frame(spark, [], LINEAGE_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    # a fresh run has no lineage yet: nothing to ask Spark
+    if not os.path.isdir(_lineage_dir(out_dir)):
+        return set()
     lin = read_lineage(spark, out_dir)
     return {
         r["bucket"]
@@ -120,7 +146,7 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, row: dict) -> None:
-    df = spark.createDataFrame([row], schema=LINEAGE_SCHEMA)
+    df = _local_frame(spark, [row], LINEAGE_SCHEMA)
     df.coalesce(1).write.mode("append").parquet(_lineage_dir(out_dir))
 
 
@@ -192,11 +218,10 @@ def run_extraction(
                         f"(staged {got} vs passed {want}); delete {staging} "
                         f"to restart from the new input"
                     )
-            print(
-                f"[runner] WARNING: resuming from frozen staged input at "
-                f"{staging}; the passed DataFrame is ignored "
-                f"(delete the staging dir to re-stage)",
-                flush=True,
+            log.warning(
+                "resuming from frozen staged input at %s; the passed "
+                "DataFrame is ignored (delete the staging dir to re-stage)",
+                staging,
             )
         # explicit schema: an all-empty input stages only _SUCCESS (no
         # data files), and a schema-less read would fail to infer
@@ -257,9 +282,11 @@ def run_extraction(
             )
             raise RuntimeError(f"bucket {b} failed: {exc}") from exc
 
-    extracted_all = read_extracted(spark, out_dir)
-    metrics = run_metrics(extracted_all).collect()[0].asDict()
-    metrics_df = spark.createDataFrame([metrics])
+    metrics_agg = run_metrics(read_extracted(spark, out_dir))
+    metrics = metrics_agg.collect()[0].asDict()
+    # columns in name order: the layout dict-row inference gave _metrics
+    metrics_schema = T.StructType(sorted(metrics_agg.schema.fields, key=lambda f: f.name))
+    metrics_df = _local_frame(spark, [metrics], metrics_schema)
     metrics_df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "_metrics")
     )
@@ -520,7 +547,7 @@ def read_incremental(spark: SparkSession, out_dir: str) -> DataFrame:
         if _gen_complete(out_dir, g)
     ]
     if not dirs:
-        return spark.createDataFrame([], schema=EXTRACTED_WITH_SEQ_SCHEMA)
+        return _local_frame(spark, [], EXTRACTED_WITH_SEQ_SCHEMA)
     out = read_extracted(spark, dirs[0])
     for d in dirs[1:]:
         out = out.unionByName(read_extracted(spark, d))

@@ -10,6 +10,7 @@ order or partitioning.
 import json
 import os
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -113,17 +114,27 @@ class TestOrderingAndSalt:
             assert [s for s, _ in pairs] == list(range(1, len(pairs) + 1)), conv
 
     def test_salting_spreads_heavy_conversation(self, spark):
-        # one heavy conv (40x) must not land in a single task partition
+        # the plan extract_turns executes: the kernel stage reads one
+        # salted Exchange with one partition per core, and the heavy
+        # conv (40x) reaches every kernel task
         df = synth_transcripts_df(spark, n_convs=50, seed=42, heavy_every=50, heavy_factor=40)
-        salted = df.repartition(8, F.col("conv_id"), F.pmod(F.hash(F.col("turn_idx")), F.lit(8)))
+        n = spark.sparkContext.defaultParallelism
         parts = (
-            salted.withColumn("pid", F.spark_partition_id())
+            extract_turns(df, include_blocks=False)
+            .withColumn("pid", F.spark_partition_id())
             .filter(F.col("conv_id") == "conv_000049")
             .groupBy("pid")
             .count()
-            .collect()
         )
-        assert len(parts) >= 4, f"heavy conv in only {len(parts)} partitions"
+        pids = {r["pid"] for r in parts.collect()}
+        lines = parts._jdf.queryExecution().executedPlan().toString().splitlines()
+        kernel = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+        exchange = next(line for line in lines[kernel + 1 :] if "Exchange" in line)
+        assert re.search(
+            rf"hashpartitioning\(conv_id#\d+, pmod\(hash\(turn_idx#\d+, 42\), \d+\), {n}\)",
+            exchange,
+        ), exchange
+        assert pids == set(range(n)), f"heavy conv in partitions {sorted(pids)} of {n}"
 
     def test_result_independent_of_input_order(self, spark):
         rows = synth_transcripts(n_convs=6, seed=7)

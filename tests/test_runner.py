@@ -105,6 +105,52 @@ def test_read_extracted_ignores_stale_bucket_dirs(spark, transcripts, tmp_path):
     assert _text_map(read_extracted(spark, out)) == clean
 
 
+def test_completed_buckets_on_fresh_dir_starts_no_job(spark, tmp_path):
+    """A fresh out_dir has no lineage: the resume probe must answer
+    without a Spark job (an empty list-built frame is a Python RDD whose
+    collect starts a Python task per core)."""
+    sc = spark.sparkContext
+    group = "test_completed_buckets_fresh_dir"
+    sc.setJobGroup(group, "completed_buckets on a fresh out_dir")
+    try:
+        assert completed_buckets(spark, str(tmp_path / "fresh")) == set()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_bookkeeping_frames_start_no_python_task(spark, transcripts, tmp_path, monkeypatch):
+    """The lineage rows and the _metrics row reach the JVM as Arrow
+    batches: no PythonRDD in their RDD lineage (which a silent fallback
+    to the pickled-list path would bring back), and _metrics keeps the
+    column order and types that dict-row inference gave it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written: dict[str, list] = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.setdefault(os.path.basename(path), []).append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    out = str(tmp_path / "bookkeeping")
+    run_extraction(spark, transcripts, out, n_buckets=2)
+    assert len(written["_lineage"]) == 2 and len(written["_metrics"]) == 1
+    for df in written["_lineage"] + written["_metrics"]:
+        rdd_lineage = df._jdf.rdd().toDebugString()
+        assert "PythonRDD[" not in rdd_lineage, rdd_lineage
+    metrics = spark.read.parquet(os.path.join(out, "_metrics"))
+    assert [(f.name, f.dataType.simpleString()) for f in metrics.schema] == [
+        ("blocks_emitted", "bigint"),
+        ("chars_extracted", "bigint"),
+        ("conversations", "bigint"),
+        ("ocr_fallback_rate", "double"),
+        ("spans_emitted", "bigint"),
+        ("turns_parsed", "bigint"),
+    ]
+
+
 def test_empty_input_run_completes(spark, tmp_path):
     """An all-empty input must produce a complete (all-zero) run, not an
     inference crash: empty staging/bucket dirs have no data files, so
