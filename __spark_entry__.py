@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_parser_spark import registry
 from pdf_parser_spark.pipeline import (
     build_chunks,
     conversation_metrics,
@@ -31,11 +32,6 @@ from pdf_parser_spark.pipeline import (
     fill_turn_gaps,
     transcripts_from_documents,
 )
-from pdf_parser_spark.dataops import DATAOPS_ORACLES, DATAOPS_QUERIES
-from pdf_parser_spark.multimodal import MULTIMODAL_ORACLES, MULTIMODAL_QUERIES
-from pdf_parser_spark.queries import ORACLES, QUERIES
-from pdf_parser_spark.search import SEARCH_ORACLES, SEARCH_QUERIES
-from pdf_parser_spark.suites import SUITE_ORACLES, SUITE_QUERIES
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -500,21 +496,10 @@ if len(GATE_ORDER) != 50:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    base.update(QUERIES)
-    base.update(DATAOPS_QUERIES)
-    base.update(SEARCH_QUERIES)
-    base.update(MULTIMODAL_QUERIES)  # stub decode is deterministic -> oracle-checked
-    base.update(SUITE_QUERIES)
-    base.update(_EXTRACTION_QUERIES)
+    base = {**registry.QUERIES, **_EXTRACTION_QUERIES}
     return {k: base[k] for k in GATE_ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    base = dict(ORACLES)
-    base.update(DATAOPS_ORACLES)
-    base.update(SEARCH_ORACLES)
-    base.update(MULTIMODAL_ORACLES)
-    base.update(SUITE_ORACLES)
-    base.update(_extraction_oracles_cached())
+    base = {**registry.ORACLES, **_extraction_oracles_cached()}
     return {k: base[k] for k in GATE_ORDER}

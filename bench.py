@@ -26,25 +26,13 @@ import os
 import sys
 import time
 
-from pdf_parser_spark.dataops import DATAOPS_QUERIES
-from pdf_parser_spark.multimodal import MULTIMODAL_QUERIES
 from pdf_parser_spark.pipeline import (
     extract_turns,
     get_spark,
     run_metrics,
     transcripts_from_documents,
 )
-from pdf_parser_spark.queries import QUERIES as _RELATIONAL_QUERIES
-from pdf_parser_spark.search import SEARCH_QUERIES
-from pdf_parser_spark.suites import SUITE_QUERIES
-
-QUERIES = {
-    **_RELATIONAL_QUERIES,
-    **DATAOPS_QUERIES,
-    **SEARCH_QUERIES,
-    **SUITE_QUERIES,
-    **MULTIMODAL_QUERIES,
-}
+from pdf_parser_spark.registry import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -20,6 +20,7 @@ Layout (flat modules; kernels are the one subpackage)
 - ``agent_tools.py``agent tool surface over the engine queries
 - ``agent.py``      deterministic ReAct loop over those tools (stub LLM)
 - ``suites.py``     composite driver-gate queries (operator -> gate key)
+- ``registry.py``   the five query families merged into QUERIES / ORACLES
 - ``physical.py``   storage layout: bucketed tables, day-partition pruning
 """
 

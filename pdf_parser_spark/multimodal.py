@@ -360,13 +360,11 @@ SQL_AUDIO_SEGMENTS = f"""
 """
 
 
-MULTIMODAL_QUERIES = {
-    "multimodal_meta": q_multimodal_meta,
-    "multimodal_frames": q_multimodal_frames,
-    "audio_segments": q_audio_segments,
+# One entry per operator: name -> (query, DuckDB oracle SQL).
+MULTIMODAL_OPS = {
+    "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
+    "multimodal_frames": (q_multimodal_frames, SQL_MULTIMODAL_FRAMES),
+    "audio_segments": (q_audio_segments, SQL_AUDIO_SEGMENTS),
 }
-MULTIMODAL_ORACLES = {
-    "multimodal_meta": SQL_MULTIMODAL_META,
-    "multimodal_frames": SQL_MULTIMODAL_FRAMES,
-    "audio_segments": SQL_AUDIO_SEGMENTS,
-}
+MULTIMODAL_QUERIES = {n: q for n, (q, _) in MULTIMODAL_OPS.items()}
+MULTIMODAL_ORACLES = {n: sql for n, (_, sql) in MULTIMODAL_OPS.items()}

@@ -525,9 +525,6 @@ def run_incremental(
         spark, new, gen_dir, n_buckets=n_buckets,
         salt_buckets=salt_buckets, fail_bucket=fail_bucket,
     )
-    n_new = (
-        read_extracted(spark, gen_dir).select("conv_id").distinct().count()
-    )
     (
         read_extracted(spark, gen_dir)
         .select("conv_id")
@@ -536,7 +533,9 @@ def run_incremental(
         .write.mode("append")
         .parquet(_roster_dir(out_dir))
     )
-    return {"generation": g, "new_convs": n_new, **summary}
+    # run_extraction's `conversations` is the distinct conv_id count
+    # over this same gen_dir
+    return {"generation": g, "new_convs": summary["conversations"], **summary}
 
 
 def read_incremental(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -652,23 +652,19 @@ def _sql_fuzzy_search() -> str:
 """
 
 
-SEARCH_QUERIES = {
-    "semantic_search": q_semantic_search,
-    "bm25_search": q_bm25_search,
-    "phrase_search": q_phrase_search,
-    "hybrid_search": q_hybrid_search,
-    "fuzzy_search": q_fuzzy_search,
-}
-SEARCH_ORACLES = {
+# One entry per operator: name -> (query, DuckDB oracle SQL).
+SEARCH_OPS = {
     # both engine paths (direct embed vs persisted index) must produce
     # the identical ranking, so the oracle is the ranking x {path}
-    "semantic_search": f"""
+    "semantic_search": (q_semantic_search, f"""
     SELECT s.rank, s.doc_id, s.similarity, p.path
     FROM ({_sql_semantic_search()}) s
     CROSS JOIN (VALUES ('direct'), ('index')) p(path)
-""",
-    "bm25_search": _sql_bm25_search(),
-    "phrase_search": _sql_phrase_search(),
-    "hybrid_search": _sql_hybrid_search(),
-    "fuzzy_search": _sql_fuzzy_search(),
+"""),
+    "bm25_search": (q_bm25_search, _sql_bm25_search()),
+    "phrase_search": (q_phrase_search, _sql_phrase_search()),
+    "hybrid_search": (q_hybrid_search, _sql_hybrid_search()),
+    "fuzzy_search": (q_fuzzy_search, _sql_fuzzy_search()),
 }
+SEARCH_QUERIES = {n: q for n, (q, _) in SEARCH_OPS.items()}
+SEARCH_ORACLES = {n: sql for n, (_, sql) in SEARCH_OPS.items()}

@@ -910,36 +910,22 @@ SQL_EMBEDDING_SUITE = f"""
 """
 
 
-SUITE_QUERIES = {
-    "text_metrics": q_text_metrics,
-    "doc_fingerprints": q_doc_fingerprints,
-    "corpus_assembly": q_corpus_assembly,
-    "window_suite": q_window_suite,
-    "rollup_suite": q_rollup_suite,
-    "events_type_stats": q_events_type_stats,
-    "tpch_scalars": q_tpch_scalars,
-    "tpch_q4q12": q_tpch_q4q12,
-    "multimodal_suite": q_multimodal_suite,
-    "semi_join_suite": q_semi_join_suite,
-    "scd2_suite": q_scd2_suite,
-    "keyword_rank_suite": q_keyword_rank_suite,
-    "neardup_pairs_suite": q_neardup_pairs_suite,
-    "embedding_suite": q_embedding_suite,
+# One entry per operator: name -> (query, DuckDB oracle SQL).
+SUITE_OPS = {
+    "text_metrics": (q_text_metrics, SQL_TEXT_METRICS),
+    "doc_fingerprints": (q_doc_fingerprints, SQL_DOC_FINGERPRINTS),
+    "corpus_assembly": (q_corpus_assembly, SQL_CORPUS_ASSEMBLY),
+    "window_suite": (q_window_suite, SQL_WINDOW_SUITE),
+    "rollup_suite": (q_rollup_suite, SQL_ROLLUP_SUITE),
+    "events_type_stats": (q_events_type_stats, SQL_EVENTS_TYPE_STATS),
+    "tpch_scalars": (q_tpch_scalars, SQL_TPCH_SCALARS),
+    "tpch_q4q12": (q_tpch_q4q12, SQL_TPCH_Q4Q12),
+    "multimodal_suite": (q_multimodal_suite, SQL_MULTIMODAL_SUITE),
+    "semi_join_suite": (q_semi_join_suite, SQL_SEMI_JOIN_SUITE),
+    "scd2_suite": (q_scd2_suite, SQL_SCD2_SUITE),
+    "keyword_rank_suite": (q_keyword_rank_suite, SQL_KEYWORD_RANK_SUITE),
+    "neardup_pairs_suite": (q_neardup_pairs_suite, SQL_NEARDUP_PAIRS_SUITE),
+    "embedding_suite": (q_embedding_suite, SQL_EMBEDDING_SUITE),
 }
-
-SUITE_ORACLES = {
-    "text_metrics": SQL_TEXT_METRICS,
-    "doc_fingerprints": SQL_DOC_FINGERPRINTS,
-    "corpus_assembly": SQL_CORPUS_ASSEMBLY,
-    "window_suite": SQL_WINDOW_SUITE,
-    "rollup_suite": SQL_ROLLUP_SUITE,
-    "events_type_stats": SQL_EVENTS_TYPE_STATS,
-    "tpch_scalars": SQL_TPCH_SCALARS,
-    "tpch_q4q12": SQL_TPCH_Q4Q12,
-    "multimodal_suite": SQL_MULTIMODAL_SUITE,
-    "semi_join_suite": SQL_SEMI_JOIN_SUITE,
-    "scd2_suite": SQL_SCD2_SUITE,
-    "keyword_rank_suite": SQL_KEYWORD_RANK_SUITE,
-    "neardup_pairs_suite": SQL_NEARDUP_PAIRS_SUITE,
-    "embedding_suite": SQL_EMBEDDING_SUITE,
-}
+SUITE_QUERIES = {n: q for n, (q, _) in SUITE_OPS.items()}
+SUITE_ORACLES = {n: sql for n, (_, sql) in SUITE_OPS.items()}

@@ -306,6 +306,47 @@ def test_frame_sampling_uniform(spark):
         assert all(0 <= i < total for i in idx)
 
 
+def test_memo_returns_one_build_until_cleared(spark):
+    """A memoized builder hands back the identical object on a repeat
+    call; clear_memo_caches empties the memo and every pin list, and
+    the next call builds afresh."""
+    from pdf_parser_spark import dataops
+
+    first = dataops._doc_shingles(spark, SF_DIR)
+    assert dataops._doc_shingles(spark, SF_DIR) is first
+    dataops.q_contamination_check(spark, SF_DIR)
+    assert dataops._MEMO and any(dataops._PINS.values())
+    dataops.clear_memo_caches()
+    assert not dataops._MEMO
+    assert not any(dataops._PINS.values())
+    assert dataops._doc_shingles(spark, SF_DIR) is not first
+
+
+def test_pin_keeps_only_the_latest_call(spark):
+    """A repeated op unpins its previous call's frames: only the
+    second call's frames stay persisted."""
+    from pdf_parser_spark import dataops
+
+    dataops.q_contamination_check(spark, SF_DIR)
+    first = list(dataops._PINS["contamination_check"])
+    dataops.q_contamination_check(spark, SF_DIR)
+    second = dataops._PINS["contamination_check"]
+    assert len(first) == len(second) == 2
+    assert all(df.is_cached for df in second)
+    assert not any(df.is_cached for df in first)
+    assert not any(a is b for a in first for b in second)
+
+
+def test_app_keyed_memo_lives_in_one_helper():
+    """Only the memo helper keys on the Spark app: a builder with its
+    own app-keyed cache would slip past clear_memo_caches."""
+    import inspect
+
+    from pdf_parser_spark import dataops
+
+    assert inspect.getsource(dataops).count("applicationId") == 1
+
+
 def test_contamination_check_properties(spark):
     """Benchmark docs (doc_id % 97 == 0) never appear in the output;
     ratios live in [0,1]; zero-gram docs are retained with ratio 0."""

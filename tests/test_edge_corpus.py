@@ -19,8 +19,8 @@ import duckdb
 import pandas as pd
 import pytest
 
-from pdf_parser_spark.dataops import DATAOPS_ORACLES, DATAOPS_QUERIES
-from pdf_parser_spark.suites import SUITE_ORACLES, SUITE_QUERIES
+from pdf_parser_spark.dataops import clear_memo_caches
+from pdf_parser_spark.registry import ORACLES, QUERIES
 
 EDGE_DOCS = [
     # (doc_id, text, lang, source)
@@ -78,8 +78,6 @@ OTHER_GRAIN = [
     "sequence_pack",
 ]
 EDGE_QUERIES = ALL_DOCS_GRAIN + OTHER_GRAIN
-QUERIES = {**DATAOPS_QUERIES, **SUITE_QUERIES}
-ORACLES = {**DATAOPS_ORACLES, **SUITE_ORACLES}
 
 
 @pytest.fixture(scope="module")
@@ -107,8 +105,6 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", EDGE_QUERIES)
 def test_edge_corpus_matches_oracle(spark, edge_dir, name):
-    from pdf_parser_spark.dataops import clear_memo_caches
-
     clear_memo_caches()  # memo tables must rebuild against THIS corpus
     con = duckdb.connect()
     con.execute(
@@ -198,8 +194,6 @@ def edge_emb_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", EMB_QUERIES)
 def test_zero_vector_matches_oracle(spark, edge_emb_dir, name):
-    from pdf_parser_spark.dataops import clear_memo_caches
-
     clear_memo_caches()
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
@@ -207,8 +201,8 @@ def test_zero_vector_matches_oracle(spark, edge_emb_dir, name):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{edge_emb_dir}/{t}.parquet/*.parquet')"
         )
-    spark_pdf = DATAOPS_QUERIES[name](spark, edge_emb_dir).toPandas()
-    oracle_pdf = con.execute(DATAOPS_ORACLES[name]).df()
+    spark_pdf = QUERIES[name](spark, edge_emb_dir).toPandas()
+    oracle_pdf = con.execute(ORACLES[name]).df()
     con.close()
     a, b = _normalize(spark_pdf), _normalize(oracle_pdf)
     assert list(a.columns) == list(b.columns)
@@ -291,22 +285,14 @@ def edge_events_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", EDGE_EVENT_QUERIES)
 def test_edge_events_matches_oracle(spark, edge_events_dir, name):
-    from pdf_parser_spark.dataops import DATAOPS_ORACLES as DO
-    from pdf_parser_spark.dataops import DATAOPS_QUERIES as DQ
-    from pdf_parser_spark.dataops import clear_memo_caches
-    from pdf_parser_spark.queries import ORACLES as QO
-    from pdf_parser_spark.queries import QUERIES as QQ
-
     clear_memo_caches()
-    queries = {**QQ, **DQ}
-    oracles = {**QO, **DO}
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"read_parquet('{edge_events_dir}/events.parquet/*.parquet')"
     )
-    spark_pdf = queries[name](spark, edge_events_dir).toPandas()
-    oracle_pdf = con.execute(oracles[name]).df()
+    spark_pdf = QUERIES[name](spark, edge_events_dir).toPandas()
+    oracle_pdf = con.execute(ORACLES[name]).df()
     con.close()
     a, b = _normalize(spark_pdf), _normalize(oracle_pdf)
     assert list(a.columns) == list(b.columns)

@@ -18,10 +18,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
-from pdf_parser_spark.dataops import DATAOPS_ORACLES, DATAOPS_QUERIES
-from pdf_parser_spark.multimodal import MULTIMODAL_ORACLES, MULTIMODAL_QUERIES
-from pdf_parser_spark.queries import ORACLES, QUERIES
-from pdf_parser_spark.search import SEARCH_ORACLES, SEARCH_QUERIES
+from pdf_parser_spark import dataops, multimodal, queries, registry, search, suites
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -29,9 +26,7 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-MEMBER_QUERIES = {**QUERIES, **DATAOPS_QUERIES, **SEARCH_QUERIES, **MULTIMODAL_QUERIES}
-MEMBER_ORACLES = {**ORACLES, **DATAOPS_ORACLES, **SEARCH_ORACLES, **MULTIMODAL_ORACLES}
-NON_GATE_MEMBERS = sorted(set(MEMBER_ORACLES) - set(entrymod.GATE_ORDER))
+NON_GATE_MEMBERS = sorted(set(registry.ORACLES) - set(entrymod.GATE_ORDER))
 
 
 @pytest.fixture(scope="module")
@@ -55,14 +50,32 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def test_every_member_has_an_oracle():
-    assert sorted(MEMBER_QUERIES) == sorted(MEMBER_ORACLES)
+    assert set(registry.QUERIES) == set(registry.ORACLES)
     assert NON_GATE_MEMBERS, "expected suite-composed members outside the gate"
+
+
+def test_registry_merges_each_family_once():
+    """The merged tables hold every family's operators — none dropped
+    by a name clash — and a name registered by two families fails at
+    import instead of silently keeping the later one."""
+    families = [
+        (queries.QUERIES, queries.ORACLES),
+        (dataops.DATAOPS_QUERIES, dataops.DATAOPS_ORACLES),
+        (search.SEARCH_QUERIES, search.SEARCH_ORACLES),
+        (suites.SUITE_QUERIES, suites.SUITE_ORACLES),
+        (multimodal.MULTIMODAL_QUERIES, multimodal.MULTIMODAL_ORACLES),
+    ]
+    assert len(registry.QUERIES) == sum(len(q) for q, _ in families)
+    assert len(registry.ORACLES) == sum(len(o) for _, o in families)
+    clash = ({"lang_id": queries.QUERIES["tpch_q1"]}, {"lang_id": "SELECT 1"})
+    with pytest.raises(RuntimeError, match="registered twice"):
+        registry._merge(families + [clash])
 
 
 @pytest.mark.parametrize("name", NON_GATE_MEMBERS)
 def test_member_matches_oracle(spark, ddb, name):
-    spark_pdf = MEMBER_QUERIES[name](spark, SF_DIR).toPandas()
-    oracle_pdf = ddb.execute(MEMBER_ORACLES[name]).df()
+    spark_pdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
+    oracle_pdf = ddb.execute(registry.ORACLES[name]).df()
     a, b = _normalize(spark_pdf), _normalize(oracle_pdf)
     assert list(a.columns) == list(b.columns), f"{name}: columns {list(a.columns)} vs {list(b.columns)}"
     assert len(a) == len(b), f"{name}: rows {len(a)} vs {len(b)}"
@@ -87,12 +100,11 @@ def test_every_member_is_timed_or_suite_folded():
     (trivial single-table reads whose cost the TPC-H/R9 entries
     already bound)."""
     import bench
-    from pdf_parser_spark.suites import SUITE_QUERIES
 
     untimed = (
-        set(MEMBER_QUERIES)
+        set(registry.QUERIES)
         - set(bench.BENCH_QUERIES)
-        - set(SUITE_QUERIES)
+        - set(suites.SUITE_QUERIES)
         - set(entrymod.GATE_ORDER)
     )
     allowed = {
