@@ -815,7 +815,11 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     treatment): raw 4-decimal terms can sum EXACTLY onto a .005
     boundary where round(,2) flips between engines/plans; with cent
     terms every group sum is a multiple of 0.01, ≥0.005 from any
-    boundary."""
+    boundary. The floor can also drop a real cent: 100*x on a
+    two-decimal double is not always integral (100*0.29 is
+    28.999999999999996, which floors to 28), so a revenue can read a
+    cent under the true cent sum. Both engines floor the same doubles,
+    so the gate hash is unaffected."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     nation = _t(spark, sf_dir, "nation")
@@ -862,7 +866,8 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     division happens on the 2-rounded sums so both engines divide
     identical doubles. Volume terms are floor-truncated to cents per
     row (Q9 treatment) so neither rounded sum can sit on a .005
-    boundary."""
+    boundary. The floor can also drop a real cent (100*0.29 floors to
+    28, see q_tpch_q7); both engines floor the same doubles."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
@@ -1003,8 +1008,9 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global maximum. Revenue terms are floor-truncated to cents per
     row (Q9 treatment — no .005 boundary sums), and the sum is rounded
     to 2 dp BEFORE the max/equality on both sides, so the comparison
-    is between identical doubles. One shuffle for the view; the max is
-    a 1-row broadcast.
+    is between identical doubles. The floor can also drop a real cent
+    (100*0.29 floors to 28, see q_tpch_q7), on both engines alike.
+    One shuffle for the view; the max is a 1-row broadcast.
     The |suppliers|-row revenue view is localCheckpoint'ed so the max
     and the equality filter read ONE materialization instead of each
     re-scanning the lineitem quarter (Catalyst does not reuse a

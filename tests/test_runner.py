@@ -3,10 +3,17 @@ output — the north rule's resumability requirement."""
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.pipeline import extract_turns, synth_transcripts_df
+from pdf_parser_spark.pipeline import (
+    EXTRACTED_WITH_SEQ_SCHEMA,
+    extract_turns,
+    run_metrics,
+    synth_transcripts_df,
+)
 from pdf_parser_spark.runner import (
     completed_buckets,
     read_extracted,
@@ -105,41 +112,49 @@ def test_read_extracted_ignores_stale_bucket_dirs(spark, transcripts, tmp_path):
     assert _text_map(read_extracted(spark, out)) == clean
 
 
-def test_completed_buckets_on_fresh_dir_starts_no_job(spark, tmp_path):
-    """A fresh out_dir has no lineage: the resume probe must answer
-    without a Spark job (an empty list-built frame is a Python RDD whose
-    collect starts a Python task per core)."""
+def test_completed_buckets_on_fresh_dir_starts_no_job(spark, transcripts, tmp_path):
+    """The resume probe reads lineage on the driver: it answers without
+    a Spark job on a fresh out_dir (no lineage) and on a completed
+    run's out_dir (one lineage file per bucket)."""
+    out = str(tmp_path / "done")
+    run_extraction(spark, transcripts, out, n_buckets=2)
     sc = spark.sparkContext
-    group = "test_completed_buckets_fresh_dir"
-    sc.setJobGroup(group, "completed_buckets on a fresh out_dir")
+    group = "test_completed_buckets_no_job"
+    sc.setJobGroup(group, "completed_buckets on a fresh and a completed out_dir")
     try:
         assert completed_buckets(spark, str(tmp_path / "fresh")) == set()
+        assert completed_buckets(spark, out) == {0, 1}
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
-def test_bookkeeping_frames_start_no_python_task(spark, transcripts, tmp_path, monkeypatch):
-    """The lineage rows and the _metrics row reach the JVM as Arrow
-    batches: no PythonRDD in their RDD lineage (which a silent fallback
-    to the pickled-list path would bring back), and _metrics keeps the
-    column order and types that dict-row inference gave it."""
-    from pyspark.sql.readwriter import DataFrameWriter
+def test_bookkeeping_starts_no_spark_io(spark, transcripts, tmp_path, monkeypatch):
+    """A run's Spark I/O is the staged input and the bucket dirs: lineage
+    and _metrics are written and read on the driver, and the counters
+    come from the bucket writes themselves, so no bucket dir is read
+    back. _metrics keeps the column order and types that dict-row
+    inference gave it."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 
-    written: dict[str, list] = {}
-    parquet = DataFrameWriter.parquet
+    written, read = [], []
+    write_parquet, read_parquet = DataFrameWriter.parquet, DataFrameReader.parquet
 
-    def spy(self, path, *args, **kwargs):
-        written.setdefault(os.path.basename(path), []).append(self._df)
-        return parquet(self, path, *args, **kwargs)
+    def spy_write(self, path, *args, **kwargs):
+        written.append(os.path.basename(path))
+        return write_parquet(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    def spy_read(self, *paths, **kwargs):
+        read.extend(os.path.basename(p) for p in paths)
+        return read_parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_read)
     out = str(tmp_path / "bookkeeping")
     run_extraction(spark, transcripts, out, n_buckets=2)
-    assert len(written["_lineage"]) == 2 and len(written["_metrics"]) == 1
-    for df in written["_lineage"] + written["_metrics"]:
-        rdd_lineage = df._jdf.rdd().toDebugString()
-        assert "PythonRDD[" not in rdd_lineage, rdd_lineage
+    monkeypatch.undo()
+    assert written == ["_staged_input", "bucket=0", "bucket=1"]
+    assert not [p for p in read if p.startswith("bucket=") or p in ("_lineage", "_metrics")], read
     metrics = spark.read.parquet(os.path.join(out, "_metrics"))
     assert [(f.name, f.dataType.simpleString()) for f in metrics.schema] == [
         ("blocks_emitted", "bigint"),
@@ -149,6 +164,68 @@ def test_bookkeeping_frames_start_no_python_task(spark, transcripts, tmp_path, m
         ("spans_emitted", "bigint"),
         ("turns_parsed", "bigint"),
     ]
+
+
+@pytest.fixture(scope="module")
+def skewed(spark):
+    """One heavy conversation (conv_000011, 10x turns) and one whose
+    turn 0 is missing (conv_000000 starts at turn_idx 1)."""
+    df = synth_transcripts_df(spark, n_convs=12, heavy_every=12, heavy_factor=10)
+    gap = (F.col("conv_id") == "conv_000000") & (F.col("turn_idx") == 0)
+    return df.filter(~gap).cache()
+
+
+@pytest.mark.parametrize("resumed", [False, True], ids=["fresh", "fail_then_resume"])
+def test_observed_counters_equal_output_counts(spark, skewed, tmp_path, resumed):
+    """The counters observed during each bucket write equal count and
+    countDistinct(conv_id) over the written bucket, and the _metrics row
+    summed from them equals run_metrics over the output, the fallback
+    rate included (compared with ==)."""
+    out = str(tmp_path / "counters")
+    if resumed:
+        with pytest.raises(RuntimeError, match="bucket 2 failed"):
+            run_extraction(spark, skewed, out, n_buckets=N_BUCKETS, fail_bucket=2)
+    summary = run_extraction(spark, skewed, out, n_buckets=N_BUCKETS)
+    assert summary["buckets_resumed_skip"] == (2 if resumed else 0)
+    completed = read_lineage(spark, out).filter(F.col("status") == "completed").collect()
+    assert sorted(r["bucket"] for r in completed) == list(range(N_BUCKETS))
+    for r in completed:
+        bucket_dir = os.path.join(out, f"bucket={r['bucket']}")
+        got = (
+            spark.read.schema(EXTRACTED_WITH_SEQ_SCHEMA).parquet(bucket_dir)
+            .agg(F.count("*").alias("n"), F.countDistinct("conv_id").alias("c"))
+            .first()
+        )
+        assert (r["n_turns"], r["n_convs"]) == (got["n"], got["c"]), r["bucket"]
+    want = run_metrics(read_extracted(spark, out)).first().asDict()
+    assert want["conversations"] == 12 and want["turns_parsed"] == skewed.count()
+    got = spark.read.parquet(os.path.join(out, "_metrics")).first().asDict()
+    assert got == want
+    assert {k: summary[k] for k in want} == want
+
+
+def test_resume_refuses_lineage_without_counters(spark, transcripts, tmp_path):
+    """A completed lineage row from before the per-bucket counters cannot
+    feed the run summary: resuming from it must fail fast, not re-read
+    the output."""
+    out = str(tmp_path / "old_lineage")
+    lineage = tmp_path / "old_lineage" / "_lineage"
+    lineage.mkdir(parents=True)
+    old = pa.table(
+        {
+            "bucket": pa.array([0], pa.int32()),
+            "status": ["completed"],
+            "n_turns": pa.array([5], pa.int64()),
+            "n_convs": pa.array([1], pa.int64()),
+            "started_at": [1.0],
+            "completed_at": [2.0],
+            "error_message": pa.array([None], pa.string()),
+        }
+    )
+    pq.write_table(old, str(lineage / "part-00000.snappy.parquet"))
+    with pytest.raises(ValueError, match="use a fresh out_dir") as err:
+        run_extraction(spark, transcripts, out, n_buckets=N_BUCKETS)
+    assert out in str(err.value)
 
 
 def test_empty_input_run_completes(spark, tmp_path):
