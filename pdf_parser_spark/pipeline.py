@@ -1,17 +1,17 @@
 """The Spark extraction pipeline (M1 in SURVEY.md §7).
 
-Flow (north rule): read transcripts -> explicit salted repartition ->
-one ``mapInPandas`` hot stage running the per-turn kernel (classify +
+Flow (north rule): read transcripts -> window over (conv_id, turn_idx)
+for stable turn ordering -> explicit salted repartition -> one
+``mapInArrow`` hot stage running the per-turn kernel (classify +
 tokenize + layout + postprocess, all Arrow-batched, zero per-row
-Python UDFs) -> window over (conv_id, turn_idx) for stable turn
-ordering -> parquet/metrics sinks.
+Python UDFs) -> parquet/metrics sinks.
 
 Scale design notes
 ------------------
-- The hot stage is a NARROW map over Arrow record batches: one shuffle
-  in front (the salted repartition that spreads million-turn
-  conversations across tasks) and one behind (the conv_id window for
-  stable ordering). Nothing else shuffles.
+- The hot stage is a NARROW map over Arrow record batches, with both
+  shuffles in front of it: the ordering window's exchange on conv_id,
+  then the salted repartition that spreads million-turn conversations
+  across tasks. Nothing shuffles behind the kernel.
 - Salting is safe because extraction is per-turn; the ordering window
   is salt-agnostic (reference analogue: ordered merge + gap fill,
   src/pipeline.py:833-845).
@@ -39,9 +39,11 @@ import os
 from typing import Any, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .kernels.chunker import build_chunks_for_turn
 from .kernels.extract import extract_turn
@@ -134,6 +136,7 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("confidence", T.DoubleType(), False),
     ]
 )
+_CHUNK_ARROW_SCHEMA = to_arrow_schema(CHUNK_SCHEMA)
 
 
 def get_spark(
@@ -291,41 +294,33 @@ def transcripts_from_documents(spark: SparkSession, sf_dir: str, convs: int = 50
 
 
 def _make_extract_batches(include_blocks: bool = True):
-    """Build the mapInPandas kernel fn: one Arrow batch in, one out.
+    """Build the mapInArrow kernel fn: one Arrow batch in, one out.
     All Python work happens here, vectorized per batch (no per-row
-    Spark UDF calls). ``turn_seq`` (precomputed by the ordering window)
-    passes through; without it, the dense turn_idx+1 stands in
-    (streaming microbatches)."""
+    Spark UDF calls). The output schema picks the emitted columns, so
+    the slim variant drops ``blocks`` by itself. ``turn_seq``
+    (precomputed by the ordering window) passes through; without it,
+    the dense turn_idx+1 stands in (streaming microbatches)."""
     schema = EXTRACTED_WITH_SEQ_SCHEMA if include_blocks else EXTRACTED_SLIM_SCHEMA
-    cols = [f.name for f in schema.fields]
+    arrow_schema = to_arrow_schema(schema)
 
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            has_seq = "turn_seq" in pdf.columns
-            seqs = pdf["turn_seq"] if has_seq else pdf["turn_idx"]
-            out: dict[str, list[Any]] = {c: [] for c in cols}
-            for conv_id, turn_idx, role, text, tool, seq in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"], pdf["tool"], seqs
-            ):
-                res = extract_turn(text, int(turn_idx), tool)
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(int(turn_idx))
-                out["role"].append(role)
-                out["source"].append(res["source"])
-                out["payload_type"].append(res["payload_type"])
-                out["is_fallback"].append(res["is_fallback"])
-                if include_blocks:
-                    out["blocks"].append(res["blocks"])
-                out["extracted_text"].append(res["extracted_text"])
-                out["spans"].append(res["spans"])
-                out["n_blocks"].append(len(res["blocks"]))
-                out["n_tables"].append(
-                    sum(1 for b in res["blocks"] if b["type"] == "table")
-                )
-                out["n_spans"].append(len(res["spans"]))
-                out["n_chars"].append(len(res["extracted_text"]))
-                out["turn_seq"].append(int(seq) if has_seq else int(seq) + 1)
-            yield pd.DataFrame(out, columns=cols)
+    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = [c for c in ("conv_id", "turn_idx", "role", "text", "tool", "turn_seq")
+                    if c in batch.schema.names]
+            rows = []
+            for row in batch.select(cols).to_pylist():
+                res = extract_turn(row["text"], row["turn_idx"], row["tool"])
+                blocks = res["blocks"]
+                rows.append({
+                    **row,
+                    **res,
+                    "n_blocks": len(blocks),
+                    "n_tables": sum(1 for b in blocks if b["type"] == "table"),
+                    "n_spans": len(res["spans"]),
+                    "n_chars": len(res["extracted_text"]),
+                    "turn_seq": row.get("turn_seq", row["turn_idx"] + 1),
+                })
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     return extract_batches, schema
 
@@ -366,7 +361,7 @@ def extract_turns(
         partitions, F.col("conv_id"), F.pmod(F.hash(F.col("turn_idx")), F.lit(salt_buckets))
     )
     fn, schema = _make_extract_batches(include_blocks)
-    return salted.mapInPandas(fn, schema=schema)
+    return salted.mapInArrow(fn, schema=schema)
 
 
 def fill_turn_gaps(extracted: DataFrame) -> DataFrame:
@@ -387,46 +382,18 @@ def fill_turn_gaps(extracted: DataFrame) -> DataFrame:
     )
 
 
-def _plain_block(b: Any) -> dict[str, Any]:
-    """Arrow hands nested structs back as Row/dict with numpy arrays —
-    normalize to the plain-Python shape the kernels expect."""
-    d = b if isinstance(b, dict) else b.asDict(recursive=False)
-    table_rows = d.get("rows")
-    if table_rows is not None:
-        table_rows = [[str(c) for c in r] for r in table_rows]
-        if not table_rows:
-            table_rows = None
-    return {
-        "block_id": d["block_id"],
-        "type": d["type"],
-        "text": d["text"],
-        "bbox": list(d["bbox"]),
-        "confidence": float(d["confidence"]),
-        "rows": table_rows,
-        "lines": d.get("lines"),
-    }
-
-
-def _chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in CHUNK_SCHEMA.fields]
-    for pdf in batches:
-        rows: list[dict[str, Any]] = []
-        for conv_id, turn_idx, blocks in zip(pdf["conv_id"], pdf["turn_idx"], pdf["blocks"]):
-            blist = [_plain_block(b) for b in blocks]
-            rows.extend(build_chunks_for_turn(conv_id, int(turn_idx), blist))
-        if rows:
-            out = pd.DataFrame(rows, columns=cols)
-        else:
-            out = pd.DataFrame({c: [] for c in cols})
-        out["page_number"] = out["page_number"].astype("int32")
-        out["confidence"] = out["confidence"].astype("float64")
-        yield out
+def _chunk_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        chunks: list[dict[str, Any]] = []
+        for row in batch.to_pylist():
+            chunks.extend(build_chunks_for_turn(row["conv_id"], row["turn_idx"], row["blocks"]))
+        yield pa.RecordBatch.from_pylist(chunks, schema=_CHUNK_ARROW_SCHEMA)
 
 
 def build_chunks(extracted: DataFrame) -> DataFrame:
     """K1 over the extracted table (M2). Narrow map — no shuffle; chunk
     explosion happens inside the Arrow batch."""
-    return extracted.select("conv_id", "turn_idx", "blocks").mapInPandas(
+    return extracted.select("conv_id", "turn_idx", "blocks").mapInArrow(
         _chunk_batches, schema=CHUNK_SCHEMA
     )
 

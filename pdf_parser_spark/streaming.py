@@ -6,7 +6,7 @@ The reference's only stream is a Redis queue polled every 2 s
 checkpoint/resume (runner.py). This module adds the genuinely-streaming
 variant for pipelines that tail an ingest table: ``readStream`` over
 the parquet/Iceberg dir -> the SAME Arrow extraction kernel (stateless
-``mapInPandas`` works unchanged on a streaming DataFrame) ->
+``mapInArrow`` works unchanged on a streaming DataFrame) ->
 ``writeStream`` with exactly-once file sink + checkpoint.
 
 Notes:
@@ -51,14 +51,14 @@ def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
 def stream_extract(transcripts: DataFrame) -> DataFrame:
     """Same kernel as the batch hot path — stateless, so it runs
     unchanged inside a microbatch."""
-    return transcripts.mapInPandas(_extract_batches, schema=EXTRACTED_WITH_SEQ_SCHEMA)
+    return transcripts.mapInArrow(_extract_batches, schema=EXTRACTED_WITH_SEQ_SCHEMA)
 
 
 def stream_metrics(transcripts: DataFrame) -> DataFrame:
     """Watermarked per-hour extraction metrics (append-mode safe). The
     watermark is applied to the kernel's OUTPUT ts (an opaque UDF stage
     would otherwise drop watermark metadata)."""
-    extracted = transcripts.mapInPandas(
+    extracted = transcripts.mapInArrow(
         _with_ts(_extract_batches), schema=_EXTRACTED_WITH_TS
     )
     return (
@@ -87,12 +87,14 @@ def _with_ts(inner):
     every metric downstream.)"""
 
     def gen(batches):
-        for pdf in batches:
-            for out in inner(iter([pdf])):
-                assert len(out) == len(pdf), "kernel must be 1 row in : 1 row out"
-                out = out.copy()
-                out["ts"] = pdf["ts"].to_numpy()
-                yield out
+        for batch in batches:
+            for out in inner(iter([batch])):
+                if out.num_rows != batch.num_rows:
+                    raise RuntimeError(
+                        f"kernel must be 1 row in : 1 row out, got {out.num_rows} "
+                        f"rows for {batch.num_rows}"
+                    )
+                yield out.append_column("ts", batch.column("ts"))
 
     return gen
 

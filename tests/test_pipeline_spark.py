@@ -128,7 +128,7 @@ class TestOrderingAndSalt:
         )
         pids = {r["pid"] for r in parts.collect()}
         lines = parts._jdf.queryExecution().executedPlan().toString().splitlines()
-        kernel = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+        kernel = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
         exchange = next(line for line in lines[kernel + 1 :] if "Exchange" in line)
         assert re.search(
             rf"hashpartitioning\(conv_id#\d+, pmod\(hash\(turn_idx#\d+, 42\), \d+\), {n}\)",
@@ -191,7 +191,12 @@ class TestGapFill:
 
 
 class TestChunks:
-    def test_chunks_match_kernel(self, extracted):
+    @pytest.mark.parametrize("stored", [False, True], ids=["in_memory", "parquet"])
+    def test_chunks_match_kernel(self, spark, extracted, stored, tmp_path):
+        # stored: the table runner.read_extracted serves, read back from parquet
+        if stored:
+            extracted.write.parquet(str(tmp_path / "extracted"))
+            extracted = spark.read.parquet(str(tmp_path / "extracted"))
         chunks = build_chunks(extracted)
         got = {r["chunk_id"]: r["text"] for r in chunks.collect()}
         golden = kernel_golden()

@@ -4,11 +4,13 @@ in a microbatch, exactly-once via checkpoint, watermarked metrics."""
 import os
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.pipeline import extract_turns, synth_transcripts_df
 from pdf_parser_spark.streaming import (
+    _with_ts,
     run_stream_to_parquet,
     stream_metrics,
     stream_transcripts,
@@ -45,6 +47,19 @@ def test_stream_extract_matches_batch(spark, input_dir, tmp_path):
     q2 = run_stream_to_parquet(spark, input_dir, out, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == len(bm)
+
+
+def test_with_ts_refuses_a_kernel_that_drops_rows():
+    # ts rides along by position, so a kernel that is not 1 row in : 1
+    # row out must fail loudly (also under python -O)
+    batch = pa.RecordBatch.from_pydict({"turn_idx": [0, 1], "ts": pa.array([1, 2], pa.timestamp("us"))})
+
+    def drop_one(batches):
+        for b in batches:
+            yield b.slice(1)
+
+    with pytest.raises(RuntimeError, match="1 row in : 1 row out"):
+        list(_with_ts(drop_one)(iter([batch])))
 
 
 def test_stream_metrics_watermarked(spark, input_dir, tmp_path):
